@@ -88,44 +88,120 @@ _DRAIN_ORACLE = f"""
 """
 
 
-def _broker_dir_for(sf_dir: str) -> str:
-    """Materialize (once per fixture version) a fake-broker queue mirroring
-    `events`.
+def _export_queues(d: str, where_by_queue: dict[str, str], sf_dir: str) -> str:
+    """Materialize (once per fixture version) fake-broker queues mirroring
+    `events`, one per ``{queue: SQL predicate}`` entry.
 
-    DuckDB does the export — no Spark job needed to build the fixture, and
-    the line order (ts, event_id) is deterministic.  The cache key is the
-    file_sources._tag convention (ADVICE r9): sf_dir PLUS size+mtime_ns of
-    events.parquet, so a regenerated fixture at the same path rebuilds the
-    queue instead of silently serving stale messages while the oracle reads
-    the fresh parquet.  Freshly-built dirs are atexit-tracked like every
-    other derived export (_track_scratch in file_sources.py)."""
-    from spark_ibm_mq_spark.operators.file_sources import _tag
-
-    tag = _tag(sf_dir, ("events",))
-    d = os.path.join(tempfile.gettempdir(), f"ibmmq_fake_broker_{tag}")
+    DuckDB reads the rows — no Spark job needed to build the fixture, and
+    the line order (ts, event_id) is deterministic — and `put_all` writes
+    them, so FakeMQBroker stays the only writer of the queue format. Each
+    queue is put into a staging dir and renamed into place; the
+    `.complete` marker goes last, so a crashed build is redone, never
+    served half-written. Freshly-built dirs are atexit-tracked like every
+    other derived export."""
     marker = os.path.join(d, ".complete")
     if os.path.exists(marker):
         return d
     import duckdb
 
     os.makedirs(d, exist_ok=True)
-    qfile = os.path.join(d, f"{_QUEUE}.jsonl")
+    staging = tempfile.mkdtemp(prefix=".staging_", dir=d)
     con = duckdb.connect()
-    rows = con.execute(
-        f"""SELECT epoch_ms(CAST(ts AS TIMESTAMP)), event_id, props
-            FROM read_parquet('{sf_dir}/events.parquet')
-            ORDER BY ts, event_id"""
-    ).fetchall()
+    for queue, where in where_by_queue.items():
+        rows = con.execute(
+            f"""SELECT epoch_ms(CAST(ts AS TIMESTAMP)), event_id, props
+                FROM read_parquet('{sf_dir}/events.parquet')
+                WHERE {where}
+                ORDER BY ts, event_id"""
+        ).fetchall()
+        FakeMQBroker(staging, queue).put_all(rows)
     con.close()
-    tmp = qfile + ".tmp"
-    import json
-
-    with open(tmp, "w", encoding="utf-8") as f:
-        for put_ms, seq_no, body in rows:
-            f.write(json.dumps({"put_ms": int(put_ms), "seq_no": int(seq_no), "body": body}) + "\n")
-    os.replace(tmp, qfile)
+    for name in os.listdir(staging):
+        os.replace(os.path.join(staging, name), os.path.join(d, name))
+    os.rmdir(staging)
     open(marker, "w").close()
     return _track_dir(d)
+
+
+def _broker_dir_for(sf_dir: str) -> str:
+    """The one-queue broker fixture mirroring `events`. The cache key is
+    the file_sources._tag convention: sf_dir PLUS size+mtime_ns of
+    events.parquet, so a regenerated fixture at the same path rebuilds the
+    queue instead of silently serving stale messages while the oracle reads
+    the fresh parquet."""
+    from spark_ibm_mq_spark.operators.file_sources import _tag
+
+    tag = _tag(sf_dir, ("events",))
+    d = os.path.join(tempfile.gettempdir(), f"ibmmq_fake_broker_{tag}")
+    return _export_queues(d, {_QUEUE: "TRUE"}, sf_dir)
+
+
+_FLUSH_SENTINEL = "__flush__"
+
+
+def _drain(spark: SparkSession, broker: FakeMQBroker, keep_messages: bool) -> str:
+    """Drain ``broker``'s queue through readStream.format("ibmmq") into a
+    fresh parquet sink with Trigger.AvailableNow; returns the sink path.
+
+    availableNow processes the one prefetched batch per run, so the loop
+    restarts from the checkpoint until the query's own progress counters
+    (rows the source handed to committed micro-batches) cover the queue —
+    no re-scan of the sink. The counters must sum to exactly the queue
+    depth: more means a batch was delivered twice, fewer that the drain
+    stalled, and either fails the query.
+
+    Destructive mode (keepMessages=false): Spark only calls `commit(end_N)`
+    when batch N+1 is CONSTRUCTED — an empty prefetch plans no batch, so a
+    fully-drained availableNow run leaves the final batch read-but-unacked
+    (exactly the at-least-once redelivery window the contract allows). On
+    a live queue the next arrival closes that window; the drain models it
+    by putting one flush sentinel and running one more cycle, whose batch
+    construction fires the final commit, then checks every real message
+    ended consumed (acked == puts, only the sentinel left)."""
+    register_ibmmq(spark)
+    total = broker.depth()
+    work = _scratch("ibmmq_drain_")
+    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+    reader = (
+        spark.readStream.format("ibmmq")
+        .schema(MQ_SCHEMA)
+        .option("path", broker.path)
+        .option("queue", broker.queue)
+        .option("keepMessages", str(keep_messages).lower())
+        .option("maxMessagesPerBatch", str(max(total, 1)))
+    )
+
+    def run_once() -> int:
+        q = (
+            reader.load()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sum(int(p["numInputRows"]) for p in q.recentProgress)
+
+    drained_rows = 0
+    for _ in range(8):
+        drained_rows += run_once()
+        if drained_rows >= total:
+            break
+    if drained_rows != total:
+        raise RuntimeError(
+            f"ibmmq drain of {broker.queue} delivered {drained_rows} rows, "
+            f"queue depth was {total}"
+        )
+    if not keep_messages:
+        broker.put(9_999_999_999_999, 0, _FLUSH_SENTINEL)
+        run_once()
+        if not (broker.acked() == total and broker.depth() == 1):
+            raise RuntimeError(
+                f"destructive drain left acked={broker.acked()} "
+                f"depth={broker.depth()} of {total} (+1 sentinel)"
+            )
+    return out
 
 
 @register("mq_source_batch_drain", oracle=_DRAIN_ORACLE)
@@ -152,43 +228,8 @@ def mq_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Browse mode keeps the shared fixture queue intact (non-destructive,
     IBMMQReceiver.java:131-134); checkpoint/sink dirs are fresh per call."""
-    d = _broker_dir_for(sf_dir)
-    register_ibmmq(spark)
-    work = _scratch("ibmmq_stream_drain_")
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    total = FakeMQBroker(d, _QUEUE).depth()
-    reader = (
-        spark.readStream.format("ibmmq")
-        .schema(MQ_SCHEMA)
-        .option("path", d)
-        .option("queue", _QUEUE)
-        .option("keepMessages", "true")
-        .option("maxMessagesPerBatch", str(max(total, 1)))
-    )
-    # availableNow processes the one prefetched batch per run; loop restarts
-    # from the checkpoint until the cursor has covered the queue. The
-    # covered-the-queue check reads the query's OWN progress counters
-    # (rows the source handed to committed micro-batches) instead of
-    # re-scanning the parquet sink — the old count() re-opened and counted
-    # the whole sink once per iteration, a full extra pass of everything
-    # drained so far (r17 opt, guide §1/§5: don't re-read what the driver
-    # already knows; decomposition in scripts/decompose_mq_drains.py timed
-    # the per-iteration count at ~1 s of the drain's ~5 s).
-    drained_rows = 0
-    for _ in range(8):
-        q = (
-            reader.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        drained_rows += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if drained_rows >= total:
-            break
-    return spark.read.parquet(out)
+    broker = FakeMQBroker(_broker_dir_for(sf_dir), _QUEUE)
+    return spark.read.parquet(_drain(spark, broker, keep_messages=True))
 
 
 @register("mq_source_destructive_drain", oracle=_DRAIN_ORACLE)
@@ -200,62 +241,15 @@ def mq_source_destructive_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs against a per-call COPY of the broker fixture (destructive reads
     mutate the queue; the shared browse fixture must stay intact) and drains
-    with keepMessages=false. Spark only calls `commit(end_N)` when batch N+1
-    is CONSTRUCTED — an empty prefetch plans no batch, so a fully-drained
-    availableNow run leaves the final batch read-but-unacked (exactly the
-    at-least-once redelivery window the contract allows). On a live queue
-    the next arrival closes that window; the fixture models it by putting
-    one flush sentinel after the drain and running one more cycle, whose
-    batch construction fires the final commit. Asserts every real message
-    ends consumed (acked == puts, only the sentinel left) — the driver row
-    therefore witnesses both the row values AND the destructive semantics."""
-    src = _broker_dir_for(sf_dir)
+    with keepMessages=false; `_drain` checks the broker ends with every
+    real message acked — the query's result therefore witnesses both the
+    row values AND the destructive semantics."""
     d = _scratch("ibmmq_destructive_")
-    shutil.copy(os.path.join(src, f"{_QUEUE}.jsonl"), os.path.join(d, f"{_QUEUE}.jsonl"))
-    register_ibmmq(spark)
-    broker = FakeMQBroker(d, _QUEUE)
-    total = broker.depth()
-    work = _scratch("ibmmq_destructive_work_")
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    reader = (
-        spark.readStream.format("ibmmq")
-        .schema(MQ_SCHEMA)
-        .option("path", d)
-        .option("queue", _QUEUE)
-        .option("keepMessages", "false")
-        .option("maxMessagesPerBatch", str(max(total, 1)))
-    )
-    sentinel = "__flush__"
-    drained = False
-    drained_rows = 0
-    for _ in range(10):
-        q = (
-            reader.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if drained:  # extra cycle: sentinel batch construction acks the rest
-            break
-        # covered-the-queue via the query's own progress counters — same
-        # replacement as mq_source_stream_drain (no per-iteration re-scan
-        # of the sink); the final assert below still checks the BROKER's
-        # acked/depth state, so the destructive-semantics witness is
-        # unchanged.
-        drained_rows += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if drained_rows >= total:
-            drained = True
-            broker.put(9_999_999_999_999, 0, sentinel)
-    assert broker.acked() == total and broker.depth() == 1, (
-        f"destructive drain left acked={broker.acked()} depth={broker.depth()} "
-        f"of {total} (+1 sentinel)"
-    )
+    shutil.copytree(_broker_dir_for(sf_dir), d, dirs_exist_ok=True)
+    out = _drain(spark, FakeMQBroker(d, _QUEUE), keep_messages=False)
     from pyspark.sql import functions as F
 
-    return spark.read.parquet(out).filter(F.col("value") != sentinel)
+    return spark.read.parquet(out).filter(F.col("value") != _FLUSH_SENTINEL)
 
 
 _MULTI_QUEUES = ("EVENTS.EVEN", "EVENTS.ODD")
@@ -265,40 +259,14 @@ def _broker_dir_multi(sf_dir: str) -> str:
     """Two-queue broker fixture: events split by user_id parity, each queue
     in its own (ts, event_id)-ordered stream — the reference's
     one-receiver-per-queue topology (IBMMQReceiver.java:425).  Same
-    size+mtime fingerprint key as _broker_dir_for (ADVICE r9)."""
+    size+mtime fingerprint key as _broker_dir_for."""
     from spark_ibm_mq_spark.operators.file_sources import _tag
 
     tag = hashlib.md5((_tag(sf_dir, ("events",)) + ":multi").encode()).hexdigest()[:12]
     d = os.path.join(tempfile.gettempdir(), f"ibmmq_fake_broker_{tag}")
-    marker = os.path.join(d, ".complete")
-    if os.path.exists(marker):
-        return d
-    import json
-
-    import duckdb
-
-    os.makedirs(d, exist_ok=True)
-    con = duckdb.connect()
-    for qname, parity in ((_MULTI_QUEUES[0], 0), (_MULTI_QUEUES[1], 1)):
-        rows = con.execute(
-            f"""SELECT epoch_ms(CAST(ts AS TIMESTAMP)), event_id, props
-                FROM read_parquet('{sf_dir}/events.parquet')
-                WHERE user_id % 2 = {parity}
-                ORDER BY ts, event_id"""
-        ).fetchall()
-        tmp = os.path.join(d, f"{qname}.jsonl.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            for put_ms, seq_no, body in rows:
-                f.write(
-                    json.dumps(
-                        {"put_ms": int(put_ms), "seq_no": int(seq_no), "body": body}
-                    )
-                    + "\n"
-                )
-        os.replace(tmp, os.path.join(d, f"{qname}.jsonl"))
-    con.close()
-    open(marker, "w").close()
-    return _track_dir(d)
+    return _export_queues(
+        d, {_MULTI_QUEUES[0]: "user_id % 2 = 0", _MULTI_QUEUES[1]: "user_id % 2 = 1"}, sf_dir
+    )
 
 
 @register(

@@ -1,9 +1,7 @@
 """Sources: the `ibmmq` DataSource (Python Data Source API) and the
-file-backed fake MQ broker used for tests and driver checks.
-
-The real-broker adapter (pymqi) is an optional drop-in behind the same
-`MQClient` interface; this container has no broker, so the fake is the
-default provider (SURVEY.md §5.2 item 3).
+file-backed fake MQ broker it reads (SURVEY.md §5.2 item 3). The broker
+calls the readers make, and how each maps onto a live queue manager, are
+listed in the `sources.mq` module docstring.
 """
 
 from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker

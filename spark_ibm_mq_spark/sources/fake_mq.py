@@ -1,4 +1,5 @@
-"""File-backed fake IBM MQ broker.
+"""File-backed fake IBM MQ broker, and the one module that knows the
+queue-file format.
 
 Stands in for a queue manager so the `ibmmq` DataSource is testable without
 a broker (SURVEY.md §5.2: "an in-memory queue stub implementing
@@ -22,6 +23,12 @@ Layout under a broker directory (one broker == one queue manager):
                            raise until the file is removed
                            (reconnect path, IBMMQReceiver.java:154-198)
 
+A message is one newline-terminated line, and a queue position is a line
+number. `put_all` appends whole lines, so an unterminated tail is a put in
+flight: readers (`message_block`, `put_ms_index_with_offsets`, `depth`) do
+not see it until its newline lands. A blank or malformed line fails the
+parse (`parse_block`) instead of shifting every later position.
+
 Semantics:
 - *browse* (keepMessages=true) reads never move `.ack`; a browse cursor is
   just a line position (MQOO_BROWSE / BROWSE_FIRST→NEXT,
@@ -34,6 +41,8 @@ Semantics:
 from __future__ import annotations
 
 import base64
+import io
+import itertools
 import json
 import os
 from collections.abc import Iterable
@@ -49,15 +58,13 @@ class FakeMQBroker:
     def _f(self, suffix: str) -> str:
         return os.path.join(self.path, f"{self.queue}.{suffix}")
 
+    def _check_connection(self) -> None:
+        if self.connection_broken():
+            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
+
     # ---- producer side ----
     def put(self, put_ms: int, seq_no: int, body: str | bytes) -> None:
-        rec: dict = {"put_ms": int(put_ms), "seq_no": int(seq_no)}
-        if isinstance(body, bytes):
-            rec["body_b64"] = base64.b64encode(body).decode("ascii")
-        else:
-            rec["body"] = body
-        with open(self._f("jsonl"), "a", encoding="utf-8") as f:
-            f.write(json.dumps(rec) + "\n")
+        self.put_all([(put_ms, seq_no, body)])
 
     def put_all(self, messages: Iterable[tuple[int, int, str | bytes]]) -> None:
         with open(self._f("jsonl"), "a", encoding="utf-8") as f:
@@ -70,124 +77,91 @@ class FakeMQBroker:
                 f.write(json.dumps(rec) + "\n")
 
     # ---- consumer side ----
-    def messages(self, from_pos: int, limit: int | None = None) -> list[dict]:
-        """Browse from an absolute queue position (line number). Destructive
-        consumers pass from_pos >= acked()."""
-        if self.connection_broken():
-            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
-        out: list[dict] = []
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
-            return out
-        with open(qfile, encoding="utf-8") as f:
-            for i, line in enumerate(f):
-                if i < from_pos:
-                    continue
-                if limit is not None and len(out) >= limit:
-                    break
-                out.append(json.loads(line))
-        return out
-
     def message_block(
         self, from_pos: int, limit: int | None = None, byte_off: int | None = None
     ) -> bytes:
-        """The same slice `messages()` returns, as the RAW newline-delimited
-        JSON bytes — no per-line json.loads. The batch reader feeds this
-        straight to pyarrow's C++ JSON parser (one columnar parse of the
-        whole slice beats 10k+ Python dict materializations ~10×); the
-        line-oriented layout makes byte slice == message slice. When the
-        planner supplies ``byte_off`` (from `put_ms_index`'s offset scan),
-        the read SEEKS there instead of skipping ``from_pos`` lines — each
-        split costs O(its slice), not O(queue prefix), so N parallel splits
-        read the queue once total rather than N/2 times."""
-        if self.connection_broken():
-            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
+        """Up to ``limit`` whole messages from queue position ``from_pos``,
+        as the raw newline-delimited JSON bytes — the one read every consumer
+        goes through (the readers hand it to `parse_block` for one columnar
+        parse). When the planner supplies ``byte_off`` (from
+        `put_ms_index_with_offsets`), the read seeks there instead of
+        skipping ``from_pos`` lines, so each split costs O(its slice), not
+        O(queue prefix). An unterminated tail is left out."""
+        self._check_connection()
+        try:
+            f = open(self._f("jsonl"), "rb")
+        except FileNotFoundError:
             return b""
-        out: list[bytes] = []
-        with open(qfile, "rb") as f:
+        with f:
+            skip = from_pos
             if byte_off is not None:
                 f.seek(byte_off)
-                for line in f:
-                    if limit is not None and len(out) >= limit:
-                        break
-                    out.append(line)
-            else:
-                for i, line in enumerate(f):
-                    if i < from_pos:
-                        continue
-                    if limit is not None and len(out) >= limit:
-                        break
-                    out.append(line)
-        return b"".join(out)
+                skip = 0
+            stop = None if limit is None else skip + limit
+            block = b"".join(itertools.islice(f, skip, stop))
+        return block[: block.rfind(b"\n") + 1]
 
-    def put_ms_index(self, from_pos: int) -> list[int]:
-        """Metadata-only scan: the put_ms of every message from ``from_pos``
-        on, WITHOUT body decode or full JSON parse — used by the batch
-        reader to plan put_ms-boundary splits driver-side. put()/put_all()
-        always write ``put_ms`` as the first field, so a string slice
-        suffices; any line that doesn't match falls back to json.loads."""
-        return self.put_ms_index_with_offsets(from_pos)[0]
+    def messages(self, from_pos: int, limit: int | None = None) -> list[dict]:
+        """`message_block` decoded to one dict per message. Destructive
+        consumers pass from_pos >= acked()."""
+        return [json.loads(line) for line in self.message_block(from_pos, limit).splitlines()]
 
-    def put_ms_index_with_offsets(
-        self, from_pos: int
-    ) -> tuple[list[int], list[int]]:
-        """`put_ms_index` plus each message's BYTE offset in the queue file,
-        so the planner can hand splits a seek position (see
-        `message_block`)."""
-        if self.connection_broken():
-            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
-            return [], []
-        with open(qfile, "rb") as f:
-            data = f.read()
-        if not data:
-            return [], []
-        # Vectorized metadata scan (the planner runs this per batch job, so
-        # it sits on the fixed-cost path the 50k-msg drain is bound by):
-        # newline offsets via one numpy byte scan, put_ms values via one
-        # pyarrow C++ JSON parse restricted to the put_ms field — no
-        # per-line Python. ~8× the old find()-per-line loop at 50k msgs.
-        import io
-
+    @staticmethod
+    def parse_block(
+        block: bytes, queue: str, fields: tuple[str, ...] = ("put_ms", "seq_no", "body", "body_b64")
+    ):
+        """One pyarrow C++ JSON parse of a block of whole queue lines,
+        restricted to ``fields`` (a subset of the default; must include
+        put_ms). pyarrow skips blank lines, so a row count that differs
+        from the newline count means a blank or malformed line: raise
+        rather than let every later queue position shift. A record without
+        put_ms raises too."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.json as pj
 
-        arr = np.frombuffer(data, dtype=np.uint8)
-        nl = np.flatnonzero(arr == 0x0A)
-        if len(nl) == 0:  # single unterminated line
-            starts = np.zeros(1, dtype=np.int64)
-        else:
-            starts = np.empty(len(nl), dtype=np.int64)
-            starts[0] = 0
-            starts[1:] = nl[:-1] + 1
-            if nl[-1] != len(data) - 1:  # unterminated trailing line
-                starts = np.append(starts, nl[-1] + 1)
+        types = {"put_ms": pa.int64(), "seq_no": pa.int64(),
+                 "body": pa.string(), "body_b64": pa.string()}
         parsed = pj.read_json(
-            io.BytesIO(data),
+            io.BytesIO(block),
             parse_options=pj.ParseOptions(
-                explicit_schema=pa.schema([("put_ms", pa.int64())]),
+                explicit_schema=pa.schema([(name, types[name]) for name in fields]),
                 unexpected_field_behavior="ignore",
             ),
         )
-        col = parsed["put_ms"].combine_chunks()
-        # Fail loudly on any broker-file anomaly (ADVICE r9): a blank line or
-        # a record missing put_ms desyncs the newline-offset array from the
-        # pyarrow record parse (and to_numpy on a null int64 raises a far
-        # less diagnosable ArrowInvalid downstream). Cheap O(1)/O(n) checks.
-        if col.null_count:
+        lines = np.count_nonzero(np.frombuffer(block, dtype=np.uint8) == 0x0A)
+        if parsed.num_rows != lines:
             raise ValueError(
-                f"fake MQ: {col.null_count} record(s) in {qfile} missing put_ms"
+                f"fake MQ: {queue} parsed {parsed.num_rows} records from {lines} "
+                "lines — blank or malformed line in queue file"
             )
-        ms = col.to_numpy()
-        if len(ms) != len(starts):
-            raise ValueError(
-                f"fake MQ: {qfile} parsed {len(ms)} records but has "
-                f"{len(starts)} non-empty lines — blank or malformed line in queue file"
-            )
+        missing = parsed["put_ms"].null_count
+        if missing:
+            raise ValueError(f"fake MQ: {missing} record(s) in {queue} missing put_ms")
+        return parsed
+
+    def put_ms_index_with_offsets(
+        self, from_pos: int
+    ) -> tuple[list[int], list[int]]:
+        """Metadata-only scan for the batch reader's split planning: the
+        put_ms of every message from ``from_pos`` on, plus its BYTE offset
+        in the queue file (so splits can seek, see `message_block`):
+        newline offsets from one numpy byte scan, put_ms from a
+        `parse_block` restricted to that field — no per-line Python."""
+        self._check_connection()
+        try:
+            with open(self._f("jsonl"), "rb") as f:
+                data = f.read()
+        except FileNotFoundError:
+            return [], []
+        data = data[: data.rfind(b"\n") + 1]
+        if not data:
+            return [], []
+        import numpy as np
+
+        nl = np.flatnonzero(np.frombuffer(data, dtype=np.uint8) == 0x0A)
+        starts = np.concatenate(([0], nl[:-1] + 1))
+        ms = self.parse_block(data, self.queue, ("put_ms",))["put_ms"].to_numpy()
         return ms[from_pos:].tolist(), starts[from_pos:].tolist()
 
     @staticmethod
@@ -223,12 +197,12 @@ class FakeMQBroker:
 
     # ---- queue state ----
     def depth(self) -> int:
-        """Current queue depth (total puts − destructive consumes)."""
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
+        """Current queue depth (complete puts − destructive consumes)."""
+        try:
+            with open(self._f("jsonl"), "rb") as f:
+                total = sum(chunk.count(b"\n") for chunk in iter(lambda: f.read(1 << 20), b""))
+        except FileNotFoundError:
             return 0
-        with open(qfile, encoding="utf-8") as f:
-            total = sum(1 for _ in f)
         return total - self.acked()
 
     def get_inhibited(self) -> bool:

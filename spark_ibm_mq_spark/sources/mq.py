@@ -36,16 +36,27 @@ Deterministic replay: the synthesized-seq state (last_ms, last_seq) is part
 of the offset JSON, so a replayed batch mints identical keys (SURVEY.md §7
 "hard parts" — this is what keeps exactly-once dedup sound across restarts).
 
-`provider=fake` (default) uses the file-backed FakeMQBroker; a real
-`pymqi`-backed client would plug in behind the same handful of calls
-(messages/ack/depth/inhibited), import-gated since no broker exists here.
+Both readers reach the broker through one call each — `message_block`
+(whole lines from a position), `put_ms_index_with_offsets` (split
+planning), `ack`, `get_inhibited` — on the file-backed FakeMQBroker, and
+every call goes through one reconnect loop (`_with_reconnect`). A live
+queue manager maps onto those calls as follows (pymqi, the public IBM MQ
+Python client):
+
+- connect with MQCSP auth               ↔ IBMMQReceiver.java:403-415
+- browse cursor (MQOO_BROWSE + MQGMO_BROWSE_FIRST/NEXT; position = cursor)
+  or destructive MQGMO_SYNCPOINT get    ↔ IBMMQReceiver.java:131-136,203-211
+- ack(upto) = qmgr.commit(), a failed batch = qmgr.backout()
+                                        ↔ IBMMQReceiver.java:349-393
+- CCSID conversion via MQGMO_CONVERT    ↔ IBMMQReceiver.java:204,242-244
+- depth / GET-inhibited = inquire MQIA_CURRENT_Q_DEPTH / MQIA_INHIBIT_GET
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import time
-from datetime import datetime, timezone
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -69,105 +80,57 @@ def repair_seq(put_ms: int, raw_seq: int, last_ms: int, last_seq: int) -> int:
     return raw_seq
 
 
-def vectorized_repair_seq(put_ms, raw_seq):
-    """Closed-form batch equivalent of chaining `repair_seq` over a slice
-    seeded with (last_ms=0, last_seq=0) — the exact state every put_ms
-    boundary split starts from (see `plan_splits`).
+def vectorized_repair_seq(put_ms, raw_seq, last_ms: int = 0, last_seq: int = 0):
+    """Closed-form batch equivalent of chaining `repair_seq` over a block,
+    from the carry-in state (last_ms, last_seq). The stream reader's offset
+    carries that state across batches; the batch reader's splits start at
+    put_ms boundaries, where the default (0, 0) is exact (see `plan_splits`).
 
-    Derivation: position i is a RESET when its chain restarts — the put_ms
-    changed (repair never consults the previous message across a timestamp
-    change) or the raw seq is not the reset-to-1 sentinel (a genuine MQ
-    group seq is kept verbatim and subsequent collisions count up from it).
-    Between resets, each raw_seq==1 message increments by one. So with r =
-    index of the nearest reset at-or-before i (a running maximum),
-    seq[i] = raw_seq[r] + (i - r) — three numpy passes, no Python loop,
-    bit-identical to the serial chain (property-tested against it)."""
-    import numpy as np
-
-    n = len(put_ms)
-    if n == 0:
-        return np.empty(0, dtype="int64")
-    idx = np.arange(n, dtype="int64")
-    reset = np.empty(n, dtype=bool)
-    reset[0] = True
-    np.not_equal(put_ms[1:], put_ms[:-1], out=reset[1:])
-    reset[1:] |= raw_seq[1:] != 1
-    last_reset = np.maximum.accumulate(np.where(reset, idx, 0))
-    return raw_seq[last_reset] + (idx - last_reset)
-
-
-def _rows_from_messages(
-    msgs: list[dict], queue: str, encoding: str, last_ms: int, last_seq: int
-) -> tuple[list[tuple], int, int]:
-    rows: list[tuple] = []
-    for rec in msgs:
-        put_ms = int(rec["put_ms"])
-        seq = repair_seq(put_ms, int(rec["seq_no"]), last_ms, last_seq)
-        body = FakeMQBroker.decode_body(rec, encoding)
-        put_ts = datetime.fromtimestamp(put_ms / 1000.0, tz=timezone.utc).replace(tzinfo=None)
-        rows.append((f"{put_ms}_{seq}", body, put_ts, seq, queue))
-        last_ms, last_seq = put_ms, seq
-    return rows, last_ms, last_seq
-
-
-def seeded_repair_seq(put_ms, raw_seq, last_ms: int, last_seq: int):
-    """`vectorized_repair_seq` generalized to an arbitrary carry-in state
-    (the stream reader's offset carries (last_ms, last_seq) across
-    batches; the batch reader's splits always seed (0, 0)).
-
-    The serial rule consults exactly one previous message, so prepending
-    the carry-in as a VIRTUAL row makes the closed-form pass reproduce the
-    seeded chain bit-identically: row 1's reset test compares against the
-    virtual row's put_ms, and a non-reset run anchored at the virtual row
-    counts up from last_seq — precisely `repair_seq`'s two branches.
-    Property-tested against the serial chain in test_mq_source.py."""
+    Derivation: the carry-in goes in front as a virtual row, since the
+    serial rule consults exactly one previous message. Position i is a
+    RESET when its chain restarts — the put_ms changed (repair never
+    consults the previous message across a timestamp change) or the raw seq
+    is not the reset-to-1 sentinel (a genuine MQ group seq is kept verbatim
+    and subsequent collisions count up from it). Between resets, each
+    raw_seq==1 message increments by one. So with r = index of the nearest
+    reset at-or-before i (a running maximum), seq[i] = raw_seq[r] + (i - r)
+    — three numpy passes, no Python loop, bit-identical to the serial chain
+    (property-tested against it)."""
     import numpy as np
 
     pm = np.concatenate((np.asarray([last_ms], dtype="int64"), put_ms))
     rs = np.concatenate((np.asarray([last_seq], dtype="int64"), raw_seq))
-    return vectorized_repair_seq(pm, rs)[1:]
+    idx = np.arange(len(pm), dtype="int64")
+    reset = np.empty(len(pm), dtype=bool)
+    reset[0] = True
+    np.not_equal(pm[1:], pm[:-1], out=reset[1:])
+    reset[1:] |= rs[1:] != 1
+    last_reset = np.maximum.accumulate(np.where(reset, idx, 0))
+    return (rs[last_reset] + (idx - last_reset))[1:]
 
 
 def arrow_batch_from_block(
     block: bytes, queue: str, encoding: str, last_ms: int, last_seq: int
 ):
-    """One columnar pass from raw broker bytes to a pyarrow RecordBatch —
-    the shared fast path of BOTH the batch reader and (since r17) the
-    stream reader: pyarrow's C++ JSON reader parses the whole line block
-    (no per-message Python dicts), the seq-collision repair runs as the
-    closed-form numpy pass, and the key column is an arrow binary_join —
-    no per-row Python on the common text-body path (guide §4: the
-    streaming boundary previously materialized 100k Python tuples that
-    Spark then converted FIELD BY FIELD to arrow on the driver; yielding
-    RecordBatches skips both loops).
+    """One columnar pass from a `message_block` to a pyarrow RecordBatch —
+    the shared path of both readers: one `FakeMQBroker.parse_block` of the
+    whole block (no per-message Python dicts), the seq-collision repair as
+    the closed-form numpy pass, and the key column as an arrow binary_join —
+    no per-row Python on the common text-body path. The parse raises on a
+    blank or malformed line, so the row count always equals the lines
+    consumed and a stream offset never drifts from the queue position.
 
     Returns (batch, last_ms, last_seq) — the carry-out repair state the
     stream reader stores in its end offset — or (None, last_ms, last_seq)
     for an empty block."""
-    import io
-
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.json as pj
 
     if not block:
         return None, last_ms, last_seq
-    parsed = pj.read_json(
-        io.BytesIO(block),
-        parse_options=pj.ParseOptions(
-            explicit_schema=pa.schema(
-                [
-                    ("put_ms", pa.int64()),
-                    ("seq_no", pa.int64()),
-                    ("body", pa.string()),
-                    ("body_b64", pa.string()),
-                ]
-            ),
-            unexpected_field_behavior="ignore",
-        ),
-    )
+    parsed = FakeMQBroker.parse_block(block, queue)
     put_ms = parsed["put_ms"].combine_chunks().to_numpy()
-    seq = seeded_repair_seq(
+    seq = vectorized_repair_seq(
         put_ms, parsed["seq_no"].combine_chunks().to_numpy(), last_ms, last_seq
     )
     b64 = parsed["body_b64"]
@@ -272,34 +235,16 @@ class _Options:
         return FakeMQBroker(self.path, self.queue)
 
 
-def _fetch_with_reconnect(opts: _Options, broker: FakeMQBroker, from_pos: int, limit: int):
-    """R12: on broken connection, back off and retry before surfacing the
-    error to Spark (which then restarts the micro-batch from the checkpoint,
-    the R13 path)."""
-    attempts = 0
-    while True:
+def _with_reconnect(opts: _Options, fn, *args):
+    """R12: ``fn(*args)`` against the broker; on a broken connection, back
+    off and retry up to ``maxReconnects`` times before surfacing the error
+    to Spark (which then restarts the micro-batch from the checkpoint, the
+    R13 path)."""
+    for attempt in itertools.count(1):
         try:
-            return broker.messages(from_pos, limit)
+            return fn(*args)
         except ConnectionError:
-            attempts += 1
-            if attempts > opts.max_reconnects:
-                raise
-            time.sleep(opts.reconnect_wait_s)
-
-
-def _block_with_reconnect(
-    opts: _Options, broker: FakeMQBroker, from_pos: int, limit: int
-) -> bytes:
-    """`message_block` under the same reconnect/backoff policy as
-    `_fetch_with_reconnect` — the raw-bytes fetch the arrow stream path
-    uses."""
-    attempts = 0
-    while True:
-        try:
-            return broker.message_block(from_pos, limit)
-        except ConnectionError:
-            attempts += 1
-            if attempts > opts.max_reconnects:
+            if attempt > opts.max_reconnects:
                 raise
             time.sleep(opts.reconnect_wait_s)
 
@@ -371,16 +316,7 @@ class MQBatchReader(DataSourceReader):
         opts = self.opts
         broker = opts.broker()
         start = broker.acked()
-        attempts = 0
-        while True:
-            try:
-                ms, offs = broker.put_ms_index_with_offsets(start)
-                break
-            except ConnectionError:
-                attempts += 1
-                if attempts > opts.max_reconnects:
-                    raise
-                time.sleep(opts.reconnect_wait_s)
+        ms, offs = _with_reconnect(opts, broker.put_ms_index_with_offsets, start)
         splits = plan_splits(ms, self._split_rows, self._max_splits)
         if not splits:
             return [MQSplit(start, 0)]
@@ -388,8 +324,7 @@ class MQBatchReader(DataSourceReader):
 
     def read(self, partition: MQSplit):
         """Emits pyarrow RecordBatches (Spark 4 arrow path for Python data
-        sources) via the shared `arrow_batch_from_block` columnar pass —
-        ~10× the old per-record loop on the 50k-message bench; the
+        sources) via the shared `arrow_batch_from_block` columnar pass; the
         CCSID/body_b64 decode path drops to Python only for the rows that
         actually carry bytes. Seq state seeds to zero: the slice starts at
         a put_ms boundary, where the repair chain has no carry-over by
@@ -398,18 +333,9 @@ class MQBatchReader(DataSourceReader):
         broker = opts.broker()
         if partition.count <= 0:
             return
-        attempts = 0
-        while True:
-            try:
-                block = broker.message_block(
-                    partition.from_pos, partition.count, partition.byte_off
-                )
-                break
-            except ConnectionError:
-                attempts += 1
-                if attempts > opts.max_reconnects:
-                    raise
-                time.sleep(opts.reconnect_wait_s)
+        block = _with_reconnect(
+            opts, broker.message_block, partition.from_pos, partition.count, partition.byte_off
+        )
         batch, _, _ = arrow_batch_from_block(block, opts.queue, opts.encoding, 0, 0)
         if batch is not None:
             yield batch
@@ -440,19 +366,15 @@ class MQSimpleStreamReader(SimpleDataSourceStreamReader):
         this iterator (records_to_arrow_batches yields them straight onto
         the arrow stream), so the whole batch crosses the Python boundary
         as one columnar block instead of max_per_batch pickled tuples that
-        the driver would re-convert to arrow FIELD BY FIELD (r17 opt,
-        guide §4 — decomposition in scripts/decompose_mq_drains.py: the
-        tuple path spent ~0.8 s/100k msgs in json.loads + the per-row
-        repair/decode/datetime loop before that conversion even began).
-        Values, keys, and the repair chain are bit-identical to the old
-        row loop (seeded_repair_seq property-test), and the offset JSON
-        is unchanged, so replay determinism and every downstream oracle
-        hold."""
+        Spark would re-convert to arrow field by field. The end
+        offset advances by the rows read, which `arrow_batch_from_block`
+        guarantees equal the whole lines consumed; a put still in flight
+        is not read until its line is complete."""
         opts = self.opts
         broker = opts.broker()
         if self._paused(broker):
             return iter([]), dict(start)
-        block = _block_with_reconnect(opts, broker, start["pos"], opts.max_per_batch)
+        block = _with_reconnect(opts, broker.message_block, start["pos"], opts.max_per_batch)
         batch, last_ms, last_seq = arrow_batch_from_block(
             block, opts.queue, opts.encoding, start["last_ms"], start["last_seq"]
         )
@@ -474,7 +396,7 @@ class MQSimpleStreamReader(SimpleDataSourceStreamReader):
         n = end["pos"] - start["pos"]
         if n <= 0:
             return iter([])
-        block = _block_with_reconnect(opts, broker, start["pos"], n)
+        block = _with_reconnect(opts, broker.message_block, start["pos"], n)
         batch, _, _ = arrow_batch_from_block(
             block, opts.queue, opts.encoding, start["last_ms"], start["last_seq"]
         )

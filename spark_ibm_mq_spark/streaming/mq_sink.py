@@ -40,8 +40,8 @@ from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker
 
 class MQWritebackSink:
     """``foreachBatch``-compatible exactly-once writer onto a fake-broker
-    queue (the pymqi adapter implements the same put/commit/backout calls
-    against a real queue manager — the documented broker seam)."""
+    queue (a live queue manager would take the same puts under syncpoint,
+    with commit/backout in place of the markers)."""
 
     def __init__(
         self,

@@ -98,8 +98,8 @@ class _GapProcessor(StatefulProcessor):
 def tws_runtime_available() -> bool:
     """transformWithStateInPandas' state-server protocol needs `protobuf`
     at RUN time (plan construction does not). The sandbox image ships
-    without it, so execution tests gate on this probe — the same documented
-    seam as the pymqi adapter: real API use, environment-missing runtime."""
+    without it, so execution tests gate on this probe: real API use,
+    environment-missing runtime."""
     try:
         from google.protobuf import descriptor  # noqa: F401
 

@@ -14,7 +14,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from spark_ibm_mq_spark.sources import FakeMQBroker, register_ibmmq
-from spark_ibm_mq_spark.sources.mq import _fetch_with_reconnect, _Options, repair_seq
+from spark_ibm_mq_spark.sources.mq import (
+    MQBatchReader,
+    MQSimpleStreamReader,
+    arrow_batch_from_block,
+    repair_seq,
+)
 
 
 @pytest.fixture()
@@ -292,29 +297,53 @@ def test_stream_get_inhibited_pauses(spark, broker, tmp_path):
 # ------------------------------------------------------------------- reconnect
 
 
+def _broker_reads(broker, wait_ms, max_reconnects):
+    """The three production reads that go through the reconnect loop:
+    the stream reader's micro-batch read, the batch reader's split
+    planning, and its split read (planned while the connection is up)."""
+    opts = {"path": broker.path, "queue": broker.queue,
+            "reconnectwaitms": str(wait_ms), "maxreconnects": str(max_reconnects)}
+    stream = MQSimpleStreamReader(opts)
+    batch = MQBatchReader(opts)
+    split = batch.partitions()[0]
+
+    def key_value(it):
+        return [row[:2] for row in _flatten_stream(it)]
+
+    return {
+        "stream.read": lambda: key_value(stream.read(stream.initialOffset())[0]),
+        "batch.partitions": lambda: [(p.from_pos, p.count) for p in batch.partitions()],
+        "batch.read": lambda: key_value(batch.read(split)),
+    }
+
+
 def test_reconnect_retries_then_raises(broker):
     broker.put(1000, 1, "m")
-    broker.set_connection_broken(True)
-    opts = _Options({"path": broker.path, "queue": broker.queue,
-                     "reconnectwaitms": "10", "maxreconnects": "2"})
-    t0 = time.monotonic()
-    with pytest.raises(ConnectionError):
-        _fetch_with_reconnect(opts, broker, 0, None)
-    assert time.monotonic() - t0 >= 0.02  # backed off between attempts (R12)
+    for name, read in _broker_reads(broker, wait_ms=10, max_reconnects=2).items():
+        broker.set_connection_broken(True)
+        t0 = time.monotonic()
+        with pytest.raises(ConnectionError):
+            read()
+        # backed off between attempts (R12)
+        assert time.monotonic() - t0 >= 0.02, name
 
 
 def test_reconnect_recovers_mid_retry(broker):
     broker.put(1000, 1, "m")
-    broker.set_connection_broken(True)
-    opts = _Options({"path": broker.path, "queue": broker.queue,
-                     "reconnectwaitms": "50", "maxreconnects": "20"})
-    t = threading.Timer(0.15, broker.set_connection_broken, args=(False,))
-    t.start()
-    try:
-        msgs = _fetch_with_reconnect(opts, broker, 0, None)
-    finally:
-        t.cancel()
-    assert [m["body"] for m in msgs] == ["m"]
+    expected = {
+        "stream.read": [("1000_1", "m")],
+        "batch.partitions": [(0, 1)],
+        "batch.read": [("1000_1", "m")],
+    }
+    for name, read in _broker_reads(broker, wait_ms=50, max_reconnects=20).items():
+        broker.set_connection_broken(True)
+        t = threading.Timer(0.15, broker.set_connection_broken, args=(False,))
+        t.start()
+        try:
+            got = read()
+        finally:
+            t.cancel()
+        assert got == expected[name], name
 
 
 # ------------------------------------------------------------------- replay
@@ -357,10 +386,10 @@ def test_read_between_offsets_deterministic(broker):
 def test_seeded_repair_matches_serial_chain(stream, seed_ms, seed_seq):
     """The stream reader's arrow path repairs from an ARBITRARY carry-in
     (last_ms, last_seq) — the offset state — and must chain bit-identically
-    to the serial rule from that seed (r17: the virtual-row closed form)."""
+    to the serial rule from that seed."""
     import numpy as np
 
-    from spark_ibm_mq_spark.sources.mq import seeded_repair_seq
+    from spark_ibm_mq_spark.sources.mq import vectorized_repair_seq
 
     ts_sorted = sorted(ms for ms, _ in stream)
     seqs = [s for _, s in stream]
@@ -369,7 +398,7 @@ def test_seeded_repair_matches_serial_chain(stream, seed_ms, seed_seq):
         seq = repair_seq(put_ms, raw_seq, last_ms, last_seq)
         serial.append(seq)
         last_ms, last_seq = put_ms, seq
-    vec = seeded_repair_seq(
+    vec = vectorized_repair_seq(
         np.array(ts_sorted, dtype="int64"),
         np.array(seqs, dtype="int64"),
         seed_ms,
@@ -458,6 +487,50 @@ def test_vectorized_scan_rejects_blank_line(tmp_path):
         f.write('{"put_ms": 3000, "seq_no": 3, "body": "c"}\n')
     with pytest.raises(ValueError, match="blank or malformed"):
         b.put_ms_index_with_offsets(0)
+
+
+def test_stream_read_rejects_blank_line(tmp_path):
+    """A blank line must fail the stream read closed. Counting parsed rows
+    instead of consumed lines would deliver `b` twice: once as 2000_1 in
+    the first batch, again as 2000_2 from the under-advanced offset."""
+    d = str(tmp_path / "q")
+    b = FakeMQBroker(d, "Q.BLANK")
+    b.put(1000, 1, "a")
+    with open(os.path.join(d, "Q.BLANK.jsonl"), "a") as f:
+        f.write("\n")  # blank line
+    b.put(2000, 1, "b")
+    r = MQSimpleStreamReader({"path": d, "queue": "Q.BLANK", "maxmessagesperbatch": "2"})
+    with pytest.raises(ValueError, match="blank or malformed"):
+        r.read(r.initialOffset())
+
+
+def test_arrow_block_rejects_lone_newline():
+    with pytest.raises(ValueError, match="blank or malformed"):
+        arrow_batch_from_block(b"\n", "Q", "utf-8", 0, 0)
+
+
+def test_torn_tail_is_invisible_until_complete(tmp_path):
+    """A put in flight (the last line not yet newline-terminated) is not a
+    message yet: the stream reader stops before it, the batch planner and
+    depth() ignore it, and once the line completes it is read normally."""
+    d = str(tmp_path / "q")
+    b = FakeMQBroker(d, "Q.TORN")
+    b.put(1000, 1, "a")
+    qfile = os.path.join(d, "Q.TORN.jsonl")
+    with open(qfile, "a") as f:
+        f.write('{"put_ms": 2000, "seq')
+    r = MQSimpleStreamReader({"path": d, "queue": "Q.TORN"})
+    it, end = r.read(r.initialOffset())
+    assert [row[:2] for row in _flatten_stream(it)] == [("1000_1", "a")]
+    assert end["pos"] == 1
+    splits = MQBatchReader({"path": d, "queue": "Q.TORN"}).partitions()
+    assert [(p.from_pos, p.count) for p in splits] == [(0, 1)]
+    assert b.depth() == 1
+    with open(qfile, "a") as f:
+        f.write('_no": 1, "body": "b"}\n')
+    it, end = r.read(end)
+    assert [row[:2] for row in _flatten_stream(it)] == [("2000_1", "b")]
+    assert end["pos"] == 2 and b.depth() == 2
 
 
 def test_vectorized_scan_rejects_missing_put_ms(tmp_path):
